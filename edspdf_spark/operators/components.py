@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..plans import gate
+
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Exact components for a broadcast-scale edge set: collect once,
@@ -59,9 +61,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50,
-                         driver_threshold: int = 1_000_000,
-                         driver_max_bytes: int = 32 * 2 ** 20) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """pairs(id_a, id_b) -> (id, component) where component = min id
     reachable via pair edges. Nodes appearing in no pair are absent
     (callers union singletons if needed).
@@ -69,19 +69,15 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
     Size-adaptive strategy: near-dup edge sets are usually TINY
     relative to the corpus (pairs above threshold after LSH), and each
     distributed propagation round costs a join + checkpoint regardless
-    of size — pure overhead on a small graph. Edge sets at or under
-    `driver_threshold` rows AND `driver_max_bytes` of raw id payload
-    run exact union-find on the driver (one collect of the edges);
-    larger sets use the distributed min-label propagation, whose
-    per-round cost is then actually amortized. The bytes gate is
-    what keeps WIDE ids honest (r4 ADVICE): a million 200-byte URL
-    edges is ~400 MB of raw payload — and several times that as
-    Python objects on the driver — so payload is measured in-plan
-    (octet_length sum for string/binary ids, 16 bytes/edge for
-    numerics) in the same aggregation that counts the edges. The
-    32 MB raw default leaves the driver transient at a couple hundred
-    MB worst-case after Python object overhead. Both paths produce
-    identical labels.
+    of size — pure overhead on a small graph. Edge sets within
+    plans.gate's DRIVER_MAX_ROWS and DRIVER_MAX_BYTES run exact
+    union-find on the driver (one collect of the edges); larger sets
+    use the distributed min-label propagation, whose per-round cost
+    is then actually amortized. The bytes limit is what keeps WIDE ids
+    honest (r4 ADVICE): a million 200-byte URL edges is ~400 MB of raw
+    payload — and several times that as Python objects on the driver
+    — so the gate measures payload in-plan in the same aggregation
+    that counts the edges. Both paths produce identical labels.
 
     Raises RuntimeError if the propagation has not converged after
     max_iter rounds (component diameter > max_iter) — unconverged
@@ -96,21 +92,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
                                          F.col("id_a").alias("dst")))
              .distinct()
              .persist())
-    # the persist is materialized either way; count + payload bytes
-    # come out of ONE aggregation job (free routing signal)
-    id_kind = edges.schema["src"].dataType.simpleString()
-    if id_kind in ("string", "binary"):
-        stats = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.octet_length("src")
-                  + F.octet_length("dst")).alias("payload")).collect()[0]
-        n_edges = stats["n"]
-        payload_bytes = stats["payload"] or 0
-    else:
-        n_edges = edges.count()
-        payload_bytes = 16 * n_edges
+    # the gate's one aggregation job materializes the persist
+    rec = gate.driver_gate(edges, "connected_components",
+                           gate.DRIVER_MAX_ROWS, gate.DRIVER_MAX_BYTES)
     pairs_p.unpersist()
-    if n_edges <= driver_threshold and payload_bytes <= driver_max_bytes:
+    if rec["path"] == "driver":
         try:
             return _driver_union_find(edges)
         finally:

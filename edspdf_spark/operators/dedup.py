@@ -31,6 +31,7 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from ..functions import (CODE_MOD, MINHASH_AB, code15, minhash_exprs,
                          tokens)
+from ..plans.gate import driver_gate
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -120,6 +121,11 @@ def _cap_doc_freq(shingles: DataFrame,
     self-join (shingle_table emits one row per DISTINCT shingle per
     doc, so count(*) per code IS document frequency).
 
+    Precondition: `code` is never NULL. The window would group NULL
+    codes as one shingle and keep them when under the cap, where an
+    equi-join drops them; shingle_table's codes are non-null and
+    _gated_pairs filters NULLs before calling this.
+
     Plan shape: the shingle table is explicitly hash-repartitioned on
     `code` FIRST; the doc-freq count then runs as a count(*) window
     over that one exchange and the filter drops hot codes in the same
@@ -141,79 +147,96 @@ def _cap_doc_freq(shingles: DataFrame,
             .where(F.col("_df") <= max_doc_freq).drop("_df"))
 
 
-# gate for the broadcast-postings pair counter: when the (materialized)
-# shingle table is at most this many parquet bytes, pair counting runs
-# as per-doc posting-list merges against a broadcast CSR — every pair
-# is generated, counted AND threshold-filtered inside one task, so only
-# the final (tiny) result rows ever cross an exchange. Beyond the gate
-# the capped self-join runs (the 100-TB path: one reused code exchange,
+# gate for the broadcast-postings pair counter: when the (id, code)
+# shingle projection is at most this many in-memory (Arrow) bytes, as
+# measured by plans.gate, pair counting runs as per-doc posting-list
+# merges against a broadcast CSR — every pair is generated, counted
+# AND threshold-filtered inside one task, so only the final (tiny)
+# result rows ever cross an exchange. Beyond the gate the capped
+# self-join runs (the 100-TB path: one reused code exchange,
 # stop-shingle guard bounding the quadratic term). The sf1.0 corpus
 # showed why the fast path matters: 3.1M shingle rows fan out to 180M
 # join rows with 161M DISTINCT pairs, so the join's partial aggregation
 # cannot reduce anything and the exchange moves ~4 GB to keep 1.5M
-# rows. Same gated-driver-path pattern as components.py's union-find
-# gate (bounded collect, explicit byte ceiling, distributed fallback).
+# rows. No row cap: the kernel holds numpy arrays, not Python objects.
 PAIR_DRIVER_MAX_BYTES = 512 << 20
 
 
-def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
-                        driver_max_bytes: int, mode: str,
-                        threshold: float, min_intersect: int,
-                        collect: str = "gated"):
-    """Gated all-pairs intersection counter. Returns the result
-    DataFrame, or None when the input exceeds the byte gate (or has an
-    id type the kernel does not handle) — caller falls back to the
-    join formulation. Semantics replicated exactly: rows are NOT
-    deduplicated (doc frequency and sizes count raw rows, as the join
-    did), ids compare strictly (equal ids never pair), sizes are
-    taken after the doc-frequency drop, and all ratios are the same
-    int64 / float64 IEEE divisions.
+def _gated_pairs(shingles: DataFrame, mode: str, threshold: float,
+                 min_intersect: int, max_doc_freq: Optional[int]) -> tuple:
+    """(pairs, gate path) for jaccard_pairs / containment_pairs.
 
-    collect="gated" (default) materializes the shingle table to a tmp
-    parquet and checks its byte size BEFORE loading the driver — the
-    safe path for unbounded inputs. collect="direct" pulls it with the
-    arrow collect (DataFrame.toArrow), skipping the disk round-trip —
-    for callers whose input is bounded BY CONSTRUCTION (the LSH-
-    candidate verification: leftsemi-pruned to candidate documents),
-    where the write+read cost ~1.5 s per query for no protection."""
+    Rows with a NULL id or code are dropped first (they never match
+    the equi-join), so both paths count doc frequency and sizes over
+    the same rows. The (id, code) projection is persisted and measured
+    by plans.gate — the measuring job fills the cache — and within
+    PAIR_DRIVER_MAX_BYTES it is pulled from the cache with toArrow()
+    into the postings kernel. Beyond the gate, or for an id type the
+    kernel does not handle, the capped self-join runs."""
+    sh = shingles.select("id", "code").where(
+        F.col("id").isNotNull() & F.col("code").isNotNull())
+    id_ddl = dict(sh.dtypes)["id"]
+    if id_ddl in ("bigint", "string"):
+        sh.persist()
+        try:
+            rec = driver_gate(sh, f"{mode}_pairs", None,
+                              PAIR_DRIVER_MAX_BYTES)
+            if rec["path"] == "driver":
+                return _pairs_via_postings(
+                    sh.toArrow(), sh.sparkSession, id_ddl, max_doc_freq,
+                    mode, threshold, min_intersect), "driver"
+        finally:
+            sh.unpersist()
+    sh = _cap_doc_freq(sh, max_doc_freq)
+    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
+    a = sh.select(F.col("id").alias("id_a"), "code")
+    b = sh.select(F.col("id").alias("id_b"), "code")
+    inter = (a.join(b, "code")
+             .where(F.col("id_a") < F.col("id_b"))
+             .groupBy("id_a", "id_b")
+             .agg(F.count("*").alias("inter"))
+             .where(F.col("inter") >= min_intersect))
+    j = (inter
+         .join(sizes.withColumnRenamed("id", "id_a")
+               .withColumnRenamed("sz", "size_a"), "id_a")
+         .join(sizes.withColumnRenamed("id", "id_b")
+               .withColumnRenamed("sz", "size_b"), "id_b"))
+    if mode == "jaccard":
+        jac = (F.col("inter")
+               / (F.col("size_a") + F.col("size_b") - F.col("inter")))
+        return (j.withColumn("jaccard", jac)
+                .where(F.col("jaccard") >= threshold)
+                .select("id_a", "id_b", "inter", "size_a", "size_b",
+                        "jaccard")), "distributed"
+    # intersections computed once per unordered pair, fanned into both
+    # directions after aggregation — on pair rows, never shingle rows
+    fwd = j.select(F.col("id_a").alias("id_src"),
+                   F.col("id_b").alias("id_dst"), "inter",
+                   F.col("size_a").alias("size_src"),
+                   F.col("size_b").alias("size_dst"))
+    rev = j.select(F.col("id_b").alias("id_src"),
+                   F.col("id_a").alias("id_dst"), "inter",
+                   F.col("size_b").alias("size_src"),
+                   F.col("size_a").alias("size_dst"))
+    c = F.col("inter") / F.col("size_src")
+    return (fwd.unionByName(rev).withColumn("containment", c)
+            .where(F.col("containment") >= threshold)), "distributed"
+
+
+def _pairs_via_postings(table, spark, id_ddl: str,
+                        max_doc_freq: Optional[int], mode: str,
+                        threshold: float, min_intersect: int) -> DataFrame:
+    """All-pairs intersection counter over a collected (id, code)
+    Arrow table with no NULLs. Semantics replicated exactly from the
+    join: rows are NOT deduplicated (doc frequency and sizes count raw
+    rows), ids compare strictly (equal ids never pair), sizes are
+    taken after the doc-frequency drop, and all ratios are the same
+    int64 / float64 IEEE divisions."""
     import numpy as np
     import pyarrow as pa
 
-    id_ddl = dict(shingles.dtypes).get("id")
-    if id_ddl not in ("bigint", "string"):
-        return None
-    spark = shingles.sparkSession
-    if collect == "direct":
-        table = shingles.select("id", "code").toArrow()
-    else:
-        import glob
-        import os
-        import shutil
-        import tempfile
-
-        import pyarrow.parquet as pq_
-
-        tmp = tempfile.mkdtemp(prefix="pairs_shingles_")
-        try:
-            shingles.select("id", "code").write.mode("overwrite")                 .parquet(tmp)
-            files = glob.glob(os.path.join(tmp, "*.parquet"))
-            if sum(os.path.getsize(f) for f in files) > driver_max_bytes:
-                return None
-            table = pq_.read_table(tmp, columns=["id", "code"])
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
     ids_raw = table.column("id").to_numpy(zero_copy_only=False)
     codes_raw = table.column("code").to_numpy(zero_copy_only=False)
-    if table.column("id").null_count or table.column("code").null_count:
-        import pyarrow.compute as pc
-
-        # NULL ids/codes never matched the equi-join; drop them
-        valid = ~(pc.is_null(table.column("id")).to_numpy(
-            zero_copy_only=False)
-            | pc.is_null(table.column("code")).to_numpy(
-                zero_copy_only=False))
-        ids_raw, codes_raw = ids_raw[valid], codes_raw[valid]
     # TWO sorts total (by code, by id); factorizations, counts and
     # both CSR layouts derive from the sorted orders (np.unique would
     # pay an internal sort per call, and the CSR builds another two)
@@ -353,9 +376,8 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
 
 def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
                   min_intersect: int = 1,
-                  max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ,
-                  driver_max_bytes: int = PAIR_DRIVER_MAX_BYTES,
-                  driver_collect: str = "gated") -> DataFrame:
+                  max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ
+                  ) -> DataFrame:
     """Exact Jaccard over shingle sets: (id_a, id_b, inter, size_a,
     size_b, jaccard) for pairs with jaccard >= threshold.
 
@@ -366,35 +388,14 @@ def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
     that many documents before the self-join — set sizes are computed
     AFTER the drop, so jaccard stays a true set ratio over the capped
     universe. Pass None ONLY for inputs already bounded by
-    construction (e.g. LSH-candidate verification).
+    construction (e.g. LSH-candidate verification). Rows with a NULL
+    id or code are ignored.
 
-    Within `driver_max_bytes` (of the materialized shingle parquet)
-    the pair space is counted by the broadcast-postings kernel and
-    filtered in-task (see PAIR_DRIVER_MAX_BYTES); beyond it, the
-    capped self-join below is the scale path."""
-    fast = _pairs_via_postings(shingles, max_doc_freq, driver_max_bytes,
-                               "jaccard", threshold, min_intersect,
-                               collect=driver_collect)
-    if fast is not None:
-        return fast
-    shingles = _cap_doc_freq(shingles, max_doc_freq)
-    sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
-    a = shingles.select(F.col("id").alias("id_a"), "code")
-    b = shingles.select(F.col("id").alias("id_b"), "code")
-    inter = (a.join(b, "code")
-             .where(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count("*").alias("inter"))
-             .where(F.col("inter") >= min_intersect))
-    out = (inter
-           .join(sizes.withColumnRenamed("id", "id_a")
-                 .withColumnRenamed("sz", "size_a"), "id_a")
-           .join(sizes.withColumnRenamed("id", "id_b")
-                 .withColumnRenamed("sz", "size_b"), "id_b"))
-    jac = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    return (out.withColumn("jaccard", jac)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard"))
+    Within PAIR_DRIVER_MAX_BYTES the pair space is counted by the
+    broadcast-postings kernel and filtered in-task; beyond it, the
+    capped self-join is the scale path (see _gated_pairs)."""
+    return _gated_pairs(shingles, "jaccard", threshold, min_intersect,
+                        max_doc_freq)[0]
 
 
 def minhash_signatures(shingles: DataFrame, n_hashes: int = 8) -> DataFrame:
@@ -441,7 +442,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     The shingle table and signatures are persisted: the DAG reuses
     the shingle table up to 7 times (signature build, one join per
     LSH band, both sides + sizes of the verification) and Spark would
-    otherwise re-scan and re-hash the corpus for each reuse."""
+    otherwise re-scan and re-hash the corpus for each reuse. The
+    shingle table stays cached as session memoization: CacheManager
+    dedupes identical plans, so later calls on the same corpus, and
+    jaccard_pairs / containment_pairs over the same shingle table,
+    read this one entry instead of re-hashing. When the verification
+    table goes through the driver gate the signatures are released
+    before returning (the result reads only the loaded `cand` cache
+    and the broadcast postings); on the join fallback they stay."""
     sh = shingle_table(df, id_col, text_col, k, max_doc_freq).persist()
     sigs = minhash_signatures(sh, n_hashes).persist()
     # cand is consumed twice (cand_ids prune + the final join); without
@@ -456,12 +464,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # verified jaccard must be over the SAME shingle universe the
     # signatures were built from — corpus-level capping happens via
     # this function's own max_doc_freq at shingle_table time
-    # driver_collect="direct": sh_cand is bounded BY CONSTRUCTION
-    # (leftsemi-pruned to candidate documents), so the verification
-    # skips the write-gated materialization (~1.5 s/query saved)
-    verified = jaccard_pairs(sh_cand, threshold=threshold,
-                             max_doc_freq=None,
-                             driver_collect="direct")
+    verified, path = _gated_pairs(sh_cand, "jaccard", threshold, 1, None)
+    if path == "driver":
+        # the gate's job loaded cand; a non-cascading unpersist keeps it
+        sigs.unpersist()
     return (cand.join(verified, ["id_a", "id_b"])
             .select("id_a", "id_b", "jaccard"))
 
@@ -825,8 +831,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
 
 def containment_pairs(shingles: DataFrame, threshold: float = 0.8,
                       min_intersect: int = 1,
-                      max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ,
-                      driver_max_bytes: int = PAIR_DRIVER_MAX_BYTES
+                      max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ
                       ) -> DataFrame:
     """One-way near-duplication: containment(src in dst) =
     |S_src ∩ S_dst| / |S_src| — catches excerpts, quotes, and
@@ -835,47 +840,14 @@ def containment_pairs(shingles: DataFrame, threshold: float = 0.8,
     containment -> 1). Emits DIRECTIONAL rows (id_src, id_dst, inter,
     size_src, size_dst, containment) with containment >= threshold.
 
-    Same scale shape as jaccard_pairs: one shingle self-join behind
-    the DEFAULT-ON max_doc_freq stop-shingle/skew guard (sizes are
-    computed after the drop; None opts out for inputs bounded by
+    Same scale shape and gate as jaccard_pairs: one shingle self-join
+    behind the DEFAULT-ON max_doc_freq stop-shingle/skew guard (sizes
+    are computed after the drop; None opts out for inputs bounded by
     construction), intersections computed once per unordered pair and
-    fanned into both directions after aggregation — the direction
-    fan-out happens on pair rows, never on shingle rows.
-
-    Within `driver_max_bytes` the broadcast-postings kernel counts and
-    filters the pair space in-task (see PAIR_DRIVER_MAX_BYTES); beyond
-    it, the capped self-join below is the scale path.
+    fanned into both directions after aggregation.
     """
-    fast = _pairs_via_postings(shingles, max_doc_freq, driver_max_bytes,
-                               "containment", threshold, min_intersect)
-    if fast is not None:
-        return fast
-    shingles = _cap_doc_freq(shingles, max_doc_freq)
-    sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
-    a = shingles.select(F.col("id").alias("id_a"), "code")
-    b = shingles.select(F.col("id").alias("id_b"), "code")
-    inter = (a.join(b, "code")
-             .where(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count("*").alias("inter"))
-             .where(F.col("inter") >= min_intersect))
-    j = (inter
-         .join(sizes.withColumnRenamed("id", "id_a")
-               .withColumnRenamed("sz", "size_a"), "id_a")
-         .join(sizes.withColumnRenamed("id", "id_b")
-               .withColumnRenamed("sz", "size_b"), "id_b"))
-    fwd = j.select(F.col("id_a").alias("id_src"),
-                   F.col("id_b").alias("id_dst"), "inter",
-                   F.col("size_a").alias("size_src"),
-                   F.col("size_b").alias("size_dst"))
-    rev = j.select(F.col("id_b").alias("id_src"),
-                   F.col("id_a").alias("id_dst"), "inter",
-                   F.col("size_b").alias("size_src"),
-                   F.col("size_a").alias("size_dst"))
-    out = fwd.unionByName(rev)
-    c = F.col("inter") / F.col("size_src")
-    return (out.withColumn("containment", c)
-            .where(F.col("containment") >= threshold))
+    return _gated_pairs(shingles, "containment", threshold,
+                        min_intersect, max_doc_freq)[0]
 
 
 def edit_verified_pairs(corpus: DataFrame, pairs: DataFrame,
