@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 
 import pytest
@@ -21,3 +22,20 @@ def spark():
              .getOrCreate())
     yield spark
     spark.stop()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One summary line counting the failures and errors that are a
+    FileNotFoundError on a path in the reference checkout: an
+    environment gap (the checkout is absent), not a program fault.
+    Reporting only; no outcome or exit code changes."""
+    from tests.reference_loader import REF
+
+    root = os.path.dirname(REF)
+    missing = re.compile(r"FileNotFoundError: .*%s/" % re.escape(root))
+    reports = (terminalreporter.stats.get("failed", [])
+               + terminalreporter.stats.get("error", []))
+    gap = sum(1 for r in reports if missing.search(r.longreprtext))
+    terminalreporter.write_line(
+        f"environment gap: {gap} of {len(reports)} failures/errors are "
+        f"FileNotFoundError on {root}")

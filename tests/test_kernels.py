@@ -116,6 +116,42 @@ def test_fast_stream_replay_matches_interpreter():
         P._FAST_STREAM_RE = saved
 
 
+def test_fast_op_findall_dispatch_invariant():
+    """_run_content dispatches findall tuples of _FAST_OP_RE on group
+    truthiness, which is exact only while no named group can match
+    empty bytes and each op sets exactly one branch-selecting group."""
+    from re import _parser
+
+    from edspdf_spark.kernels import pdf as P
+
+    rx = P._FAST_OP_RE
+    min_width = {}
+
+    def walk(sub):
+        for op, av in sub:
+            if op is _parser.SUBPATTERN:
+                min_width[av[0]] = av[3].getwidth()[0]
+            for item in av if isinstance(av, (tuple, list)) else ():
+                for x in item if isinstance(item, list) else (item,):
+                    if isinstance(x, _parser.SubPattern):
+                        walk(x)
+
+    walk(_parser.parse(rx.pattern, rx.flags))
+    assert set(rx.groupindex.values()) <= set(min_width)
+    for name, idx in rx.groupindex.items():
+        assert min_width[idx] >= 1, f"group {name} can match empty"
+
+    # tuple order of findall, and the groups the dispatch tests in order
+    names = sorted(rx.groupindex, key=rx.groupindex.get)
+    selectors = ("s", "tm", "size", "bt", "et")
+    for op, want in ((b"() Tj\n", "s"), (b"1 0 0 1 0 0 Tm\n", "tm"),
+                     (b"/F1 9 Tf\n", "size"), (b"BT\n", "bt"),
+                     (b"ET", "et")):
+        (groups,) = rx.findall(op)
+        got = dict(zip(names, groups))
+        assert [g for g in selectors if got[g]] == [want], op
+
+
 def test_walk_line_text_matches_walk_line():
     """The extract_style=False fast path must produce the exact text
     of the per-char walk for every whitespace shape the normalizer
